@@ -5,9 +5,12 @@ Shape (scale rationale):
     scan(documents_raw)
       → validity filters (P1-P3) with a rejects side-output (lineage,
         never silently dropped)
-      → explicit repartition on hash(doc_id) (north rule: salted spread
-        of documents across partitions)
-      → normal docs: ONE fused Arrow kernel (tokenize→layout→
+      → split into small and oversized docs; each branch then gets its
+        own explicit repartition on hash(doc_id) (north rule: salted
+        spread of documents across partitions), sized by AQE from the
+        branch's shuffle bytes — an empty branch costs one task, not
+        spark.sql.shuffle.partitions Python tasks
+      → small docs: ONE fused Arrow kernel (tokenize→layout→
         boilerplate→assemble). Each document is a single row, so this
         path is shuffle-free and embarrassingly parallel — at 10^12
         docs the plan is a pure map, bounded only by scan + CPU.
@@ -107,43 +110,41 @@ def extract_documents(
     max_size_bytes: int = MAX_FILE_SIZE_BYTES,
     shard_size_bytes: int | None = None,
     shard_pages: int = SHARD_PAGES,
-    partitions: int | None = None,
     presalted: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """documents_raw → (documents(doc_id, spans), rejects).
 
-    ``partitions``: explicit salt/repartition width before the kernel
-    stage (defaults to spark.sql.shuffle.partitions).
     ``presalted``: the input is already hash(doc_id)-spread (e.g. by
-    render_documents_raw) — skip the repartition so the content bytes
-    are never shuffled a second time.
+    render_documents_raw) — skip the per-branch salt so the content
+    bytes are never shuffled a second time.
     """
-    spark = raw.sparkSession
-    n_part = partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-
     classified = classify_rejects(raw, max_size_bytes)
     rejects = classified.filter(F.col("reject_reason").isNotNull()).select(
         "doc_id", "reject_reason", "size_bytes", F.lit("error").alias("status")
     )
     ok = classified.filter(F.col("reject_reason").isNull()).drop("reject_reason")
-
-    # explicit salt: uniform hash spread of docs over partitions so a
-    # run of adjacent oversized policies cannot pile into one task
-    if not presalted:
-        ok = ok.repartition(n_part, F.xxhash64("doc_id"))
-
     sized = _extract_spans_sized(
-        ok, effective_shard_size(max_size_bytes, shard_size_bytes), shard_pages
+        ok, effective_shard_size(max_size_bytes, shard_size_bytes), shard_pages, presalted
     )
     return sized.drop("size_bytes"), rejects
 
 
 def _extract_spans_sized(
-    ok: DataFrame, shard_size_bytes: int, shard_pages: int
+    ok: DataFrame, shard_size_bytes: int, shard_pages: int, presalted: bool
 ) -> DataFrame:
     """Kernel stage over validated docs → (doc_id, spans, size_bytes).
     size_bytes rides along so results assembly needs no join back to
     the raw table (a full-width shuffle at corpus scale).
+
+    The salt — a uniform hash spread of docs over partitions, so a run
+    of adjacent oversized policies cannot pile into one task — is
+    applied per branch, AFTER the small/oversized split, unless
+    ``presalted``. It is a repartition by expression only, so AQE
+    coalesces each branch's exchange from its shuffle bytes: an empty
+    oversized tail runs one Python task instead of
+    spark.sql.shuffle.partitions, a small corpus runs as few kernel
+    tasks as its bytes need, and each multi-MB giant still exceeds the
+    coalescing target and keeps a partition of its own.
 
     Only PDF documents take the oversized shard path: page-range
     sharding keys on ``%%PAGE`` markers, a PDF concept. Oversized HTML
@@ -156,14 +157,18 @@ def _extract_spans_sized(
         is_pdf = F.col("magic") == F.lit(PDF_MAGIC)
     else:
         is_pdf = F.substring(F.col("content").cast("binary"), 1, 5) == F.lit(PDF_MAGIC)
-    small = ok.filter((F.col("size_bytes") <= shard_size_bytes) | ~is_pdf)
+
+    def salt(df: DataFrame) -> DataFrame:
+        return df if presalted else df.repartition(F.xxhash64("doc_id"))
+
+    small = salt(ok.filter((F.col("size_bytes") <= shard_size_bytes) | ~is_pdf))
     small_docs = small.select(
         "doc_id",
         extract_spans_udf("content", "media", "n_pages").alias("spans"),
         "size_bytes",
     )
 
-    big = ok.filter((F.col("size_bytes") > shard_size_bytes) & is_pdf)
+    big = salt(ok.filter((F.col("size_bytes") > shard_size_bytes) & is_pdf))
     # filtered (compressed) oversized docs must be rewritten to plain
     # bytes BEFORE the %%PAGE marker scan and JVM-side slicing (see
     # decode_filters_udf); the contains() guard keeps plain-corpus
@@ -265,7 +270,6 @@ def extract_results(
     max_size_bytes: int = MAX_FILE_SIZE_BYTES,
     shard_size_bytes: int | None = None,
     shard_pages: int = SHARD_PAGES,
-    partitions: int | None = None,
     model_used: str = DEFAULT_MODEL,
     prompt_version: str = "v1",
     presalted: bool = False,
@@ -275,11 +279,7 @@ def extract_results(
     stores failed extractions in the same `extractions` table,
     app/services/storage.py:167-306).
 
-    Scale shape (what the physical plan ACTUALLY compiles to — earlier
-    rounds claimed ReuseExchange shared one salt exchange across the
-    branches; inspection of the plan shows the optimizer instead pushes
-    each branch's filter BELOW its salt exchange, which defeats
-    exchange reuse but produces something just as good):
+    Scale shape (what the physical plan compiles to):
 
     - three branch scans of the source, each pruned: the small-doc
       branch carries ``size_bytes <= shard_threshold`` as a pushed
@@ -290,18 +290,21 @@ def extract_results(
       never ``content`` — when the source has a ``magic`` prefix
       column (see classify_rejects), so it costs ~nothing despite its
       CASE predicate being unpushable.
-    - each branch shuffles only ITS filtered subset, so the union's
-      total shuffle volume is one corpus, not three.
+    - the salt exchange sits AFTER the split, one per extraction branch
+      (see :func:`_extract_spans_sized`): each branch shuffles only ITS
+      filtered subset, so the union's total shuffle volume is one
+      corpus, and AQE coalesces each exchange from its shuffle bytes
+      instead of pinning it at spark.sql.shuffle.partitions Python
+      tasks. The reject branch is a pure map with no exchange.
     - one action for records + rejects — no second job over the corpus.
 
-    ``presalted``: skip the salt repartition when the source is already
+    ``presalted``: skip the per-branch salt when the source is already
     well-spread — a bucketed/multi-file parquet table read with
     ``files.maxPartitionBytes`` sizing gives balanced input splits, and
     re-shuffling the full byte payload (the job's single largest
-    network cost) buys nothing. Use salted mode when the layout is
-    unknown or adversarial (few huge files, doc order correlated with
-    size); measured on a balanced layout, presalted is strictly faster
-    (BENCH.md).
+    network cost) buys nothing. The kernel then runs one task per input
+    split. Use salted mode when the layout is unknown or adversarial
+    (few huge files, doc order correlated with size).
 
     COMPUTED (non-scan) sources: the per-branch pushdown above is only
     free when the source is a columnar scan (pruned columns / skipped
@@ -313,17 +316,10 @@ def extract_results(
     wasted; BENCH.md "computed-source triple evaluation"). Wrap such a
     source in :func:`materialized_source` so all branches read one
     materialization."""
-    spark = raw.sparkSession
-
-    if presalted:
-        salted = raw
-    else:
-        n_part = partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-        salted = raw.repartition(n_part, F.xxhash64("doc_id"))
-    classified = classify_rejects(salted, max_size_bytes)
+    classified = classify_rejects(raw, max_size_bytes)
     ok = classified.filter(F.col("reject_reason").isNull()).drop("reject_reason")
     sized = _extract_spans_sized(
-        ok, effective_shard_size(max_size_bytes, shard_size_bytes), shard_pages
+        ok, effective_shard_size(max_size_bytes, shard_size_bytes), shard_pages, presalted
     )
     results = build_results(sized, model_used=model_used, prompt_version=prompt_version)
 

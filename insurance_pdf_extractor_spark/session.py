@@ -10,7 +10,11 @@ Notable choices:
   session overrides here.
 - AQE on: runtime partition coalescing + skew-join splitting are the
   first line of defense against skewed document sizes; explicit salting
-  in plans/pipeline.py is the second (north rule).
+  in plans/pipeline.py is the second (north rule). The two compose: the
+  salt is a per-branch repartition on xxhash64(doc_id) after the
+  small/oversized split, with no fixed partition count, so AQE coalesces
+  each branch from its shuffle bytes (an empty branch runs one task) and
+  spark.sql.shuffle.partitions is only the upper bound.
 - Arrow batch size bounded so a batch of large documents fits executor
   memory in the pandas-UDF stages.
 """

@@ -317,8 +317,8 @@ def test_shard_path_decodes_filtered_oversized(spark):
     comp, n = render_text("big1", long_text, filters=("FlateDecode",))
     plain, n2 = render_text("big1", long_text)
     assert n == n2 and n >= 4
-    sharded, _ = extract_documents(raw_df(comp, n), shard_size_bytes=1, shard_pages=2, partitions=2)
-    fused, _ = extract_documents(raw_df(plain, n2), shard_size_bytes=10**9, partitions=2)
+    sharded, _ = extract_documents(raw_df(comp, n), shard_size_bytes=1, shard_pages=2)
+    fused, _ = extract_documents(raw_df(plain, n2), shard_size_bytes=10**9)
     assert _span_map(sharded) == _span_map(fused)
 
 

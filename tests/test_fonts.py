@@ -480,9 +480,9 @@ def test_shard_path_extracts_encoded_oversized(spark):
             )
 
         sharded, _ = extract_documents(
-            raw_df(content), shard_size_bytes=1, shard_pages=2, partitions=2
+            raw_df(content), shard_size_bytes=1, shard_pages=2
         )
-        fused, _ = extract_documents(raw_df(content), partitions=2)
+        fused, _ = extract_documents(raw_df(content))
         assert _span_map(sharded) == _span_map(fused)
         assert len(_span_map(sharded)["big1"]) > 100
 

@@ -56,7 +56,7 @@ def test_pipeline_accounts_for_every_hostile_doc(spark):
         for name, content in HOSTILE
     ]
     raw = spark.createDataFrame(rows, DOCUMENTS_RAW)
-    res = extract_results(raw, partitions=4)
+    res = extract_results(raw)
     got = res.select("doc_id", "status").collect()
     # conservation: every input doc appears exactly once, success or reject
     assert sorted(r["doc_id"] for r in got) == sorted(n for n, _ in HOSTILE)

@@ -575,15 +575,19 @@ def test_spark_interleaved_parallelism_invariance(spark, interleaved_corpus):
 
     docs = interleaved_corpus.select("doc_id", "text").limit(40)
 
-    def run(n_part):
-        raw = render_documents_raw(docs, partitions=n_part, interleaved=True)
-        out, _ = extract_documents(raw, presalted=True, partitions=n_part)
+    def spans(out):
         return sorted(
             (r["doc_id"], tuple((s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]))
             for r in out.collect()
         )
 
-    assert run(2) == run(7)
+    def run(n_part):
+        raw = render_documents_raw(docs, partitions=n_part, interleaved=True)
+        return spans(extract_documents(raw, presalted=True)[0])
+
+    # the AQE-sized per-branch salt (no presalted) over the same docs
+    raw = render_documents_raw(docs, interleaved=True)
+    assert run(2) == run(7) == spans(extract_documents(raw)[0])
 
 
 def test_oversized_html_stays_in_fused_kernel(spark):

@@ -16,7 +16,7 @@ from insurance_pdf_extractor_spark.schema import DOCUMENTS
 def pipeline_out(spark, corpus_docs):
     raw = C.to_raw_df(spark, corpus_docs)
     docs, rejects = extract_documents(
-        raw, max_size_bytes=60_000, shard_size_bytes=8_192, shard_pages=4, partitions=4
+        raw, max_size_bytes=60_000, shard_size_bytes=8_192, shard_pages=4
     )
     return raw, docs.cache(), rejects.cache()
 
@@ -63,23 +63,34 @@ def test_sharded_path_used_and_equivalent(spark, corpus_docs):
     big = [d for d in corpus_docs if d.n_pages >= 10 and d.expected_spans is not None][:5]
     assert big
     raw = C.to_raw_df(spark, big)
-    sharded, _ = extract_documents(raw, shard_size_bytes=1, shard_pages=3, partitions=2)
-    fused, _ = extract_documents(raw, shard_size_bytes=10**9, partitions=2)
+    sharded, _ = extract_documents(raw, shard_size_bytes=1, shard_pages=3)
+    fused, _ = extract_documents(raw, shard_size_bytes=10**9)
     a = {r["doc_id"]: r["spans"] for r in sharded.collect()}
     b = {r["doc_id"]: r["spans"] for r in fused.collect()}
     assert a == b
 
 
-def test_parallelism_invariance(spark, corpus_docs):
+def _salt_width(n: int) -> dict:
+    """Session confs that pin the per-branch salt at exactly ``n``
+    partitions (AQE coalescing off, so the width is not byte-sized)."""
+    return {
+        "spark.sql.shuffle.partitions": str(n),
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+
+
+def test_parallelism_invariance(spark, corpus_docs, session_conf):
     """Identical output at different partition counts (north rule: all
     ordering derives from data, never task order)."""
     sample = [d for d in corpus_docs if d.expected_spans is not None][:40]
     raw = C.to_raw_df(spark, sample)
-    out1, _ = extract_documents(raw, partitions=1)
-    out8, _ = extract_documents(raw, partitions=8)
-    rows1 = {r["doc_id"]: r["spans"] for r in out1.collect()}
-    rows8 = {r["doc_id"]: r["spans"] for r in out8.collect()}
-    assert rows1 == rows8
+
+    def rows(n):
+        with session_conf(_salt_width(n)):
+            out, _ = extract_documents(raw)
+            return {r["doc_id"]: r["spans"] for r in out.collect()}
+
+    assert rows(1) == rows(8)
 
 
 def test_records_match_oracle(pipeline_out, corpus_docs):
@@ -110,7 +121,7 @@ def test_documents_schema(pipeline_out):
     assert docs.schema == DOCUMENTS or [f.name for f in docs.schema.fields] == ["doc_id", "spans"]
 
 
-def test_extract_results_parallelism_invariant(spark, corpus_docs):
+def test_extract_results_parallelism_invariant(spark, corpus_docs, session_conf):
     """The single-pass plan emits identical rows at different partition
     counts (north rule: all ordering data-derived)."""
     from insurance_pdf_extractor_spark.plans.pipeline import extract_results
@@ -119,8 +130,9 @@ def test_extract_results_parallelism_invariant(spark, corpus_docs):
     raw = C.to_raw_df(spark, corpus_docs[:40])
 
     def snapshot(partitions):
-        res = extract_results(raw, partitions=partitions)
-        rows = res.select("doc_id", "status", "extracted_data", "warnings", "file_size").collect()
+        with session_conf(_salt_width(partitions)):
+            res = extract_results(raw)
+            rows = res.select("doc_id", "status", "extracted_data", "warnings", "file_size").collect()
         return sorted((r["doc_id"], r["status"], r["extracted_data"], tuple(r["warnings"] or []), r["file_size"]) for r in rows)
 
     assert snapshot(2) == snapshot(16)
@@ -144,11 +156,11 @@ def test_materialized_source_value_identical(spark, corpus_docs):
             for r in rows
         )
 
-    base = snapshot(extract_results(raw, partitions=4))
+    base = snapshot(extract_results(raw))
     with materialized_source(raw) as shared_raw:
-        shared = snapshot(extract_results(shared_raw, partitions=4))
+        shared = snapshot(extract_results(shared_raw))
         # the branches must actually read the cache, not re-plan around it
-        plan = extract_results(shared_raw, partitions=4)._jdf.queryExecution().explainString(
+        plan = extract_results(shared_raw)._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
         )
         assert "InMemoryTableScan" in plan or "InMemoryRelation" in plan

@@ -204,6 +204,49 @@ def test_interleaved_storage_routes_html_around_shard_path(spark, tmp_path):
     assert res.filter(res.status == "error").count() == 0
 
 
+def test_extract_salt_is_per_branch_and_aqe_sized(spark, tmp_path, session_conf):
+    """The doc_id salt sits after the small/oversized split and carries
+    no partition count, so AQE sizes each branch from its shuffle bytes.
+    A fixed-width salt pins every branch at spark.sql.shuffle.partitions
+    Python tasks — an empty oversized tail included — and one action
+    over a small corpus then runs ~70 tasks at a width of 32."""
+    from insurance_pdf_extractor_spark.plans.pipeline import extract_results
+    from insurance_pdf_extractor_spark.sources.render import render_documents_raw
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(200)
+    raw_dir = str(tmp_path / "raw")
+    render_documents_raw(docs).coalesce(2).write.parquet(raw_dir)
+    stored = spark.read.parquet(raw_dir)
+
+    sc = spark.sparkContext
+    group = "plan-invariants-salt"
+    with session_conf({"spark.sql.shuffle.partitions": "32"}):
+        df = extract_results(stored)
+        plan = _plan(spark, df)
+        sc.setJobGroup(group, group)
+        try:
+            df.write.format("noop").mode("overwrite").save()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    tracker = sc.statusTracker()
+    stage_ids = {
+        s for j in tracker.getJobIdsForGroup(group) for s in tracker.getJobInfo(j).stageIds
+    }
+    # stages skipped because an earlier AQE job already ran them complete no task
+    ran = [i for i in map(tracker.getStageInfo, stage_ids) if i and i.numCompletedTasks]
+    n_tasks = sum(i.numTasks for i in ran)
+    assert ran and n_tasks <= 16, f"{n_tasks} tasks over {len(ran)} stages"
+
+    import re as _re
+
+    salts = [l for l in plan.splitlines() if _re.search(r"xxhash64\(doc_id#\d+, \d+\)", l)]
+    assert not [l for l in salts if "REPARTITION_BY_NUM" in l], salts
+    # one salt per extraction branch; the reject branch has no exchange
+    assert len([l for l in salts if "REPARTITION_BY_COL" in l]) == 2, salts
+
+
 def test_render_path_renders_once_per_branch(spark):
     """render_udf is marked nondeterministic so filter pushdown cannot
     duplicate it — the plan historically evaluated the render kernel
