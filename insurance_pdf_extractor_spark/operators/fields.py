@@ -16,6 +16,10 @@ column expressions:
   (extraction.py:195-206).
 
 Everything here is Catalyst-codegen'd column expressions — no UDFs.
+Each stage's Column trees are built once per process (see
+functions/memo.py): a call replays them as the same sequence of
+``select("*", …)``/``drop`` projections, so it costs only its
+DataFrame calls, not the construction of the Columns behind them.
 """
 
 from __future__ import annotations
@@ -34,6 +38,7 @@ from ..functions.normalizers import (
     normalize_commission_expr,
     normalize_date_expr,
 )
+from ..functions.memo import column_memo
 
 DOC_TEXT = "_doc_text"
 
@@ -57,6 +62,7 @@ _LABELS_ALT = "|".join(
 )
 _SCRAPE_PAT = rf"(?m)^(?:{_LABELS_ALT}):[ \t]*.*$"
 _KV = "_label_kv"
+_RAW_COLS = [f"_raw_{f}" for f in FIELD_NAMES]
 
 
 def scrape_raw_fields(df: DataFrame, spans_col: str = "spans") -> DataFrame:
@@ -73,9 +79,15 @@ def scrape_raw_fields(df: DataFrame, spans_col: str = "spans") -> DataFrame:
     dependence on spark.sql.mapKeyDedupPolicy), matching
     regexp_extract's first-match semantics. Batched select projections,
     not withColumn chains (driver re-analysis cost)."""
+    for cols in _scrape_projections(spans_col):
+        df = df.select("*", *cols)
+    return df.drop(_KV)
+
+
+@column_memo
+def _scrape_projections(spans_col: str) -> tuple[tuple[Column, ...], ...]:
     from ..functions.json_extract import first_win_entries
 
-    df = df.select("*", doc_text_expr(F.col(spans_col)).alias(DOC_TEXT))
     lines = F.regexp_extract_all(F.col(DOC_TEXT), F.lit(_SCRAPE_PAT), 0)
     entries = F.transform(
         lines,
@@ -84,17 +96,27 @@ def scrape_raw_fields(df: DataFrame, spans_col: str = "spans") -> DataFrame:
             clean_text_expr(F.regexp_replace(l, r"^[^:]*:[ \t]*", "")).alias("value"),
         ),
     )
-    df = df.select("*", F.map_from_entries(first_win_entries(entries)).alias(_KV))
-    raw_cols = [
+    raw_cols = tuple(
         F.element_at(F.col(_KV), F.lit(label)).alias(f"_raw_{fname}")
         for label, fname in FIELD_LABELS
-    ]
-    return df.select("*", *raw_cols).drop(_KV)
+    )
+    return (
+        (doc_text_expr(F.col(spans_col)).alias(DOC_TEXT),),
+        (F.map_from_entries(first_win_entries(entries)).alias(_KV),),
+        raw_cols,
+    )
 
 
 def validate_and_normalize(df: DataFrame) -> DataFrame:
     """Apply the model validators; emit the 18 final field columns plus
     validation_errors, warnings, status."""
+    for cols in _validate_projections():
+        df = df.select("*", *cols)
+    return df
+
+
+@column_memo
+def _validate_projections() -> tuple[tuple[Column, ...], ...]:
     r = {f: F.col(f"_raw_{f}") for f in FIELD_NAMES}
 
     errors = []
@@ -130,8 +152,8 @@ def validate_and_normalize(df: DataFrame) -> DataFrame:
     # poison-when field expressions below reference the COLUMN (one
     # row-level evaluation, small driver plan) instead of inlining the
     # whole error-array expression 18x
-    df = df.select(
-        "*", F.filter(F.array(*errors), lambda e: e.isNotNull()).alias("validation_errors")
+    validation_errors = F.filter(F.array(*errors), lambda e: e.isNotNull()).alias(
+        "validation_errors"
     )
     has_error = F.size(F.col("validation_errors")) > 0
 
@@ -164,9 +186,7 @@ def validate_and_normalize(df: DataFrame) -> DataFrame:
         for f in FIELD_NAMES
     }
 
-    df = df.select(
-        "*", *[F.when(has_error, poisoned[f]).otherwise(norm[f]).alias(f) for f in FIELD_NAMES]
-    )
+    fields = tuple(F.when(has_error, poisoned[f]).otherwise(norm[f]).alias(f) for f in FIELD_NAMES)
 
     # date-relationship warning (extraction.py:195-206) — only on valid
     # records
@@ -184,10 +204,11 @@ def validate_and_normalize(df: DataFrame) -> DataFrame:
     warnings = F.filter(F.array(warning), lambda w: w.isNotNull())
 
     # status (app/services/pdf_processor.py:113)
-    return df.select(
-        "*",
-        warnings.alias("warnings"),
-        F.when(has_error, "partial_success").otherwise(F.lit("success")).alias("status"),
+    status = F.when(has_error, "partial_success").otherwise(F.lit("success"))
+    return (
+        (validation_errors,),
+        fields,
+        (warnings.alias("warnings"), status.alias("status")),
     )
 
 
@@ -195,7 +216,5 @@ def extract_fields(documents: DataFrame, spans_col: str = "spans") -> DataFrame:
     """documents(doc_id, spans) → records with the 18 fields +
     validation_errors + warnings + status (+ _doc_text kept for the
     confidence stage)."""
-    df = scrape_raw_fields(documents, spans_col)
-    df = validate_and_normalize(df)
-    drop = [c for c in df.columns if c.startswith("_raw_")]
-    return df.drop(*drop)
+    df = validate_and_normalize(scrape_raw_fields(documents, spans_col))
+    return df.drop(*_RAW_COLS)

@@ -199,7 +199,9 @@ _ATTR_RE = re.compile(
 )
 _NONWS_RE = re.compile(rb"[^ \t\r\n\f]")
 
-_FORMAT_SNIFF = (b"<!doc", b"<html")
+# lower-cased 5-byte prefixes that sniff_format reads as HTML; the
+# pipeline's reject check accepts every letter case of them
+HTML_SNIFF = (b"<!doc", b"<html")
 
 
 def sniff_format(content: bytes | None) -> str | None:
@@ -210,7 +212,7 @@ def sniff_format(content: bytes | None) -> str | None:
     head = bytes(content[:5])
     if head == b"%PDF-":
         return "pdf"
-    if head.lower() in _FORMAT_SNIFF:
+    if head.lower() in HTML_SNIFF:
         return "html"
     return None
 

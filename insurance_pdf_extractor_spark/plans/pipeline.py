@@ -21,21 +21,31 @@ Shape (scale rationale):
       → union → field extraction/validation (pure Catalyst expressions)
       → results + per-partition checkpoint/lineage writes.
 
+Plan building (on the Spark driver): every Column tree below — reject reason,
+kernel and shard projections, the ~700-Column field and results stages
+— is built once per process and memoized on the live SparkContext plus
+the builder arguments (functions/memo.py). A call only replays those
+Columns as the same sequence of filter/select/drop projections, so a
+warm ``extract_results()`` costs its DataFrame calls, not the ~12k py4j
+round trips of constructing the trees.
+
 Reference lifecycle being re-expressed: POST /api/v1/extract
 (app/api/routes/extraction.py:79-199 → app/services/pdf_processor.py:29-169).
 """
 
 from __future__ import annotations
 
+import itertools
 from contextlib import contextmanager
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..constants import (
     DEFAULT_MODEL,
     EMPTY_VALUE,
+    FIELD_NAMES,
     MAX_FILE_SIZE_BYTES,
     SHARD_FRAC,
     SHARD_PAGES,
@@ -49,15 +59,22 @@ from ..operators.assemble import (
     shard_offsets_udf,
 )
 from ..operators.fields import DOC_TEXT, extract_fields
+from ..operators.html import HTML_SNIFF
 from ..schema import DOCUMENTS_SIZED
 from ..functions.confidence import confidence_map_expr, estimated_cost_expr, token_count_expr
+from ..functions.memo import column_memo
 
 PDF_MAGIC = bytes(b"%PDF-")
-# 5-byte magic prefixes the pipeline accepts. HTML joins PDF (north
-# rule: the corpus interleaves formats; operators/html.py) — the two
-# case variants cover real-world doctype casing without a per-row
-# lower() on a binary column.
-VALID_MAGICS = (b"%PDF-", b"<!DOC", b"<!doc", b"<html", b"<HTML")
+# 5-byte magic prefixes the pipeline accepts: exactly what
+# operators/html.sniff_format reads as a document — the PDF magic, or an
+# HTML prefix in any ASCII letter case (HTML joins PDF; north rule: the
+# corpus interleaves formats). Spelling out every case variant keeps the
+# check a literal set on the binary column, with no per-row lower().
+VALID_MAGICS = (PDF_MAGIC,) + tuple(
+    bytes(v)
+    for prefix in HTML_SNIFF
+    for v in itertools.product(*(sorted({c, ord(chr(c).upper())}) for c in prefix))
+)
 
 
 def effective_shard_size(max_size_bytes: int, shard_size_bytes: int | None) -> int:
@@ -91,17 +108,44 @@ def classify_rejects(raw: DataFrame, max_size_bytes: int = MAX_FILE_SIZE_BYTES) 
     schema evolution. Under that contract ``magic IS NULL`` genuinely
     means unreadable content, so the fast path may reject on it without
     touching ``content``."""
-    if "magic" in raw.columns:
+    return raw.withColumn("reject_reason", _reject_reason(max_size_bytes, "magic" in raw.columns))
+
+
+@column_memo
+def _reject_reason(max_size_bytes: int, has_magic: bool) -> Column:
+    if has_magic:
         magic_bad = F.col("magic").isNull() | ~F.col("magic").isin(list(VALID_MAGICS))
     else:
         magic_bad = F.col("content").isNull() | ~F.substring(
             F.col("content").cast("binary"), 1, 5
         ).isin(list(VALID_MAGICS))
-    return raw.withColumn(
-        "reject_reason",
+    return (
         F.when(F.col("size_bytes") > max_size_bytes, "size_exceeds_limit")
         .when(magic_bad, "invalid_pdf")
-        .when(F.col("n_pages") <= 0, "no_pages"),
+        .when(F.col("n_pages") <= 0, "no_pages")
+    )
+
+
+@column_memo
+def _reject_split() -> tuple[Column, Column, Column]:
+    """(accepted, rejected) filters over a classify_rejects frame, and
+    the status column of a reject row."""
+    return (
+        F.col("reject_reason").isNull(),
+        F.col("reject_reason").isNotNull(),
+        F.lit("error").alias("status"),
+    )
+
+
+@column_memo
+def _reject_stubs(model_used: str, prompt_version: str) -> tuple[Column, ...]:
+    """Results-shaped columns of a reject row (after its doc_id)."""
+    return (
+        F.col("size_bytes").alias("file_size"),
+        F.lit("error").alias("status"),
+        F.lit(model_used).alias("model_used"),
+        F.lit(prompt_version).alias("prompt_version"),
+        F.array(F.concat(F.lit("rejected: "), F.col("reject_reason"))).alias("warnings"),
     )
 
 
@@ -119,10 +163,11 @@ def extract_documents(
     bytes are never shuffled a second time.
     """
     classified = classify_rejects(raw, max_size_bytes)
-    rejects = classified.filter(F.col("reject_reason").isNotNull()).select(
-        "doc_id", "reject_reason", "size_bytes", F.lit("error").alias("status")
+    accepted, rejected, error_status = _reject_split()
+    rejects = classified.filter(rejected).select(
+        "doc_id", "reject_reason", "size_bytes", error_status
     )
-    ok = classified.filter(F.col("reject_reason").isNull()).drop("reject_reason")
+    ok = classified.filter(accepted).drop("reject_reason")
     sized = _extract_spans_sized(
         ok, effective_shard_size(max_size_bytes, shard_size_bytes), shard_pages, presalted
     )
@@ -153,35 +198,56 @@ def _extract_spans_sized(
     page is a bounded straggler task, not a correctness or memory
     hazard; at corpus scale such documents are a vanishing tail of the
     interleaved mix."""
-    if "magic" in ok.columns:
+    small_if, big_if, salt_key, spans, content, shard, shard_key, lines = _kernel_columns(
+        shard_size_bytes, shard_pages, "magic" in ok.columns
+    )
+
+    def salt(df: DataFrame) -> DataFrame:
+        return df if presalted else df.repartition(salt_key)
+
+    small_docs = salt(ok.filter(small_if)).select("doc_id", spans, "size_bytes")
+
+    big = salt(ok.filter(big_if)).withColumn("content", content)
+    shards = big.select("doc_id", "n_pages", "media", "size_bytes", shard)
+    # CRITICAL: exploded shards land in the parent row's partition — one
+    # giant doc's shards would tokenize serially in one task without
+    # this spread (measured: sharding was net-negative before). Only the
+    # oversized tail pays this extra chunked-bytes shuffle.
+    shard_lines = shards.repartition(shard_key).select(
+        "doc_id", "n_pages", "media", "size_bytes", lines
+    )
+    big_docs = shard_lines.groupBy("doc_id").applyInPandas(
+        merge_sharded_lines, schema=DOCUMENTS_SIZED
+    )
+    return small_docs.unionByName(big_docs)
+
+
+@column_memo
+def _kernel_columns(
+    shard_size_bytes: int, shard_pages: int, has_magic: bool
+) -> tuple[Column, ...]:
+    """Columns of :func:`_extract_spans_sized`: the small/oversized
+    filters, the salt key, the fused kernel, the oversized branch's
+    decoded content, its exploded shards, the shard salt key and the
+    per-shard kernel."""
+    if has_magic:
         is_pdf = F.col("magic") == F.lit(PDF_MAGIC)
     else:
         is_pdf = F.substring(F.col("content").cast("binary"), 1, 5) == F.lit(PDF_MAGIC)
+    small_if = (F.col("size_bytes") <= shard_size_bytes) | ~is_pdf
+    big_if = (F.col("size_bytes") > shard_size_bytes) & is_pdf
+    spans = extract_spans_udf("content", "media", "n_pages").alias("spans")
 
-    def salt(df: DataFrame) -> DataFrame:
-        return df if presalted else df.repartition(F.xxhash64("doc_id"))
-
-    small = salt(ok.filter((F.col("size_bytes") <= shard_size_bytes) | ~is_pdf))
-    small_docs = small.select(
-        "doc_id",
-        extract_spans_udf("content", "media", "n_pages").alias("spans"),
-        "size_bytes",
-    )
-
-    big = salt(ok.filter((F.col("size_bytes") > shard_size_bytes) & is_pdf))
     # filtered (compressed) oversized docs must be rewritten to plain
     # bytes BEFORE the %%PAGE marker scan and JVM-side slicing (see
     # decode_filters_udf); the contains() guard keeps plain-corpus
     # plans from ever invoking the UDF — and only the oversized tail
     # can pay this extra Arrow round trip at all
-    big = big.withColumn(
-        "content",
-        F.when(
-            F.contains(F.col("content"), F.lit(b"/Filter"))
-            | F.contains(F.col("content"), F.lit(b"/ObjStm")),
-            decode_filters_udf("content"),
-        ).otherwise(F.col("content")),
-    )
+    content = F.when(
+        F.contains(F.col("content"), F.lit(b"/Filter"))
+        | F.contains(F.col("content"), F.lit(b"/ObjStm")),
+        decode_filters_udf("content"),
+    ).otherwise(F.col("content"))
     # offsets-only sharding: bytes cross Arrow into Python once (marker
     # scan), chunks are sliced JVM-side INSIDE the transform that feeds
     # the explode. Slicing before the Generate matters: exploding
@@ -207,29 +273,17 @@ def _extract_spans_sized(
             so["base_page"].alias("base_page"),
         ),
     )
-    shards = big.select(
-        "doc_id",
-        "n_pages",
-        "media",
-        "size_bytes",
+    lines = shard_lines_udf("shard.chunk", "shard.base_offset", "shard.base_page").alias("lines")
+    return (
+        small_if,
+        big_if,
+        F.xxhash64("doc_id"),
+        spans,
+        content,
         F.explode(chunk_structs).alias("shard"),
+        F.xxhash64("doc_id", "shard.shard_idx"),
+        lines,
     )
-    # CRITICAL: exploded shards land in the parent row's partition — one
-    # giant doc's shards would tokenize serially in one task without
-    # this spread (measured: sharding was net-negative before). Only the
-    # oversized tail pays this extra chunked-bytes shuffle.
-    shards = shards.repartition(F.xxhash64("doc_id", "shard.shard_idx"))
-    shard_lines = shards.select(
-        "doc_id",
-        "n_pages",
-        "media",
-        "size_bytes",
-        shard_lines_udf("shard.chunk", "shard.base_offset", "shard.base_page").alias("lines"),
-    )
-    big_docs = shard_lines.groupBy("doc_id").applyInPandas(
-        merge_sharded_lines, schema=DOCUMENTS_SIZED
-    )
-    return small_docs.unionByName(big_docs)
 
 
 @contextmanager
@@ -317,22 +371,14 @@ def extract_results(
     source in :func:`materialized_source` so all branches read one
     materialization."""
     classified = classify_rejects(raw, max_size_bytes)
-    ok = classified.filter(F.col("reject_reason").isNull()).drop("reject_reason")
+    accepted, rejected, _ = _reject_split()
+    ok = classified.filter(accepted).drop("reject_reason")
     sized = _extract_spans_sized(
         ok, effective_shard_size(max_size_bytes, shard_size_bytes), shard_pages, presalted
     )
     results = build_results(sized, model_used=model_used, prompt_version=prompt_version)
-
-    reject_stubs = (
-        classified.filter(F.col("reject_reason").isNotNull())
-        .select(
-            "doc_id",
-            F.col("size_bytes").alias("file_size"),
-            F.lit("error").alias("status"),
-            F.lit(model_used).alias("model_used"),
-            F.lit(prompt_version).alias("prompt_version"),
-            F.array(F.concat(F.lit("rejected: "), F.col("reject_reason"))).alias("warnings"),
-        )
+    reject_stubs = classified.filter(rejected).select(
+        "doc_id", *_reject_stubs(model_used, prompt_version)
     )
     return results.unionByName(reject_stubs, allowMissingColumns=True)
 
@@ -348,41 +394,9 @@ def build_results(
     validation errors/warnings, status, confidence scores, deterministic
     token/cost metrics."""
     rec = extract_fields(documents)
-    fields = _field_cols(rec)
-    out_tok = (F.length(F.to_json(F.struct(*[F.col(f) for f in fields]))) / 4).cast("long")
-    # A9: count of extracted (non-sentinel) fields
-    non_empty = F.size(
-        F.filter(
-            F.array(*[F.col(f).cast("string") for f in fields]),
-            lambda v: v.isNotNull() & (v != EMPTY_VALUE) & (v != "[]"),
-        )
-    )
-    # batched projections (withColumn chains cost serial driver seconds
-    # re-analyzing this plan); second select for columns derived from
-    # input/output_tokens so those evaluate once per row
-    rec = rec.select(
-        "*",
-        confidence_map_expr(F.col(DOC_TEXT)).alias("confidence_scores"),
-        token_count_expr(F.col(DOC_TEXT)).alias("input_tokens"),
-        out_tok.alias("output_tokens"),
-        F.lit(model_used).alias("model_used"),
-        F.lit(prompt_version).alias("prompt_version"),
-        # nested record mirroring the reference's extracted_data JSON
-        # blob (native struct, app/services/storage.py:233-236)
-        F.struct(*[F.col(f) for f in fields]).alias("extracted_data"),
-        # failed field names from the structured error messages
-        # ("<field>: <message>"); cf. the reference's regex scrape F17
-        F.array_distinct(
-            F.transform(F.col("validation_errors"), lambda e: F.split(e, ":").getItem(0))
-        ).alias("failed_fields"),
-        non_empty.alias("extracted_fields"),
-    )
-    rec = rec.select(
-        "*",
-        (F.col("input_tokens") + F.col("output_tokens")).alias("total_tokens"),
-        estimated_cost_expr("input_tokens", "output_tokens", model_used).alias("estimated_cost"),
-    )
-    if "size_bytes" in rec.columns:
+    for cols in _results_projections(model_used, prompt_version):
+        rec = rec.select("*", *cols)
+    if "size_bytes" in documents.columns:
         # size carried through the kernel stage — no join needed
         rec = rec.withColumnRenamed("size_bytes", "file_size")
     elif raw is not None:
@@ -390,7 +404,38 @@ def build_results(
     return rec.drop(DOC_TEXT)
 
 
-def _field_cols(df: DataFrame) -> list[str]:
-    from ..constants import FIELD_NAMES
-
-    return [f for f in FIELD_NAMES if f in df.columns]
+@column_memo
+def _results_projections(model_used: str, prompt_version: str) -> tuple[tuple[Column, ...], ...]:
+    fields = [F.col(f) for f in FIELD_NAMES]
+    out_tok = (F.length(F.to_json(F.struct(*fields))) / 4).cast("long")
+    # A9: count of extracted (non-sentinel) fields
+    non_empty = F.size(
+        F.filter(
+            F.array(*[c.cast("string") for c in fields]),
+            lambda v: v.isNotNull() & (v != EMPTY_VALUE) & (v != "[]"),
+        )
+    )
+    # batched projections (withColumn chains cost serial driver seconds
+    # re-analyzing this plan); second select for columns derived from
+    # input/output_tokens so those evaluate once per row
+    first = (
+        confidence_map_expr(F.col(DOC_TEXT)).alias("confidence_scores"),
+        token_count_expr(F.col(DOC_TEXT)).alias("input_tokens"),
+        out_tok.alias("output_tokens"),
+        F.lit(model_used).alias("model_used"),
+        F.lit(prompt_version).alias("prompt_version"),
+        # nested record mirroring the reference's extracted_data JSON
+        # blob (native struct, app/services/storage.py:233-236)
+        F.struct(*fields).alias("extracted_data"),
+        # failed field names from the structured error messages
+        # ("<field>: <message>"); cf. the reference's regex scrape F17
+        F.array_distinct(
+            F.transform(F.col("validation_errors"), lambda e: F.split(e, ":").getItem(0))
+        ).alias("failed_fields"),
+        non_empty.alias("extracted_fields"),
+    )
+    second = (
+        (F.col("input_tokens") + F.col("output_tokens")).alias("total_tokens"),
+        estimated_cost_expr("input_tokens", "output_tokens", model_used).alias("estimated_cost"),
+    )
+    return first, second

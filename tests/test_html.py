@@ -691,6 +691,12 @@ def test_spark_pipeline_hostile_html_poison_rows(spark):
 
 
 def test_classify_rejects_accepts_html_magic(spark):
+    """The reject check accepts exactly what sniff_format reads as a
+    document — on the content-slice path and on the metadata-width
+    ``magic`` column path alike."""
+    from pyspark.sql import functions as F
+
+    from insurance_pdf_extractor_spark.operators.html import sniff_format
     from insurance_pdf_extractor_spark.plans.pipeline import classify_rejects
 
     rows = [
@@ -698,15 +704,21 @@ def test_classify_rejects_accepts_html_magic(spark):
         ("ok-html", bytearray(b"<!DOCTYPE html><p>x</p>"), 23, 1),
         ("ok-html-lower", bytearray(b"<!doctype html>"), 15, 1),
         ("ok-html-bare", bytearray(b"<html><p>x</p>"), 14, 1),
+        ("ok-html-mixed", bytearray(b"<!Doctype html><p>x</p>"), 23, 1),
+        ("ok-html-title", bytearray(b"<Html><p>x</p>"), 14, 1),
         ("bad-gif", bytearray(b"GIF89a...."), 10, 1),
+        ("bad-pdf-lower", bytearray(b"%pdf-1.4 x"), 10, 1),
     ]
     raw = spark.createDataFrame(
         rows, "doc_id string, content binary, size_bytes long, n_pages int"
     )
-    got = {
-        r["doc_id"]: r["reject_reason"]
-        for r in classify_rejects(raw).select("doc_id", "reject_reason").collect()
-    }
-    assert got["ok-pdf"] is None and got["ok-html"] is None
-    assert got["ok-html-lower"] is None and got["ok-html-bare"] is None
-    assert got["bad-gif"] == "invalid_pdf"
+    for src in (raw, raw.withColumn("magic", F.substring("content", 1, 5))):
+        got = {
+            r["doc_id"]: r["reject_reason"]
+            for r in classify_rejects(src).select("doc_id", "reject_reason").collect()
+        }
+        for doc_id, content, _size, _pages in rows:
+            expect = None if sniff_format(bytes(content)) else "invalid_pdf"
+            assert got[doc_id] == expect, (src.columns, doc_id, got[doc_id])
+        assert got["ok-html-mixed"] is None and got["ok-html-title"] is None
+        assert got["bad-gif"] == "invalid_pdf" and got["bad-pdf-lower"] == "invalid_pdf"

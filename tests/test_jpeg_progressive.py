@@ -120,6 +120,18 @@ def test_malformed_progressive_raises_valueerror():
         decode_jpeg(good[:sos] + b"\xff\xd9")
 
 
+def test_sos_successive_approximation_high_bound():
+    """T.81 limits Ah to 0..13 for 8-bit samples: an SOS with Ah=14
+    fails fast instead of refining an illegal stream."""
+    good = encode_jpeg_progressive(synth(7, 16, 16))
+    sos = good.find(b"\xff\xda")
+    ns = good[sos + 4]
+    ahal = sos + 5 + 2 * ns + 2  # after Ls, Ns, the component specs, Ss, Se
+    bad = good[:ahal] + bytes([14 << 4 | (good[ahal] & 0xF)]) + good[ahal + 1 :]
+    with pytest.raises(ValueError, match="invalid progressive scan parameters"):
+        decode_jpeg(bad)
+
+
 def test_hostile_mutation_sweep():
     img = synth(6, 24, 32)
     good = encode_jpeg_progressive(img, subsample=True)

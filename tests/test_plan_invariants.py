@@ -247,6 +247,83 @@ def test_extract_salt_is_per_branch_and_aqe_sized(spark, tmp_path, session_conf)
     assert len([l for l in salts if "REPARTITION_BY_COL" in l]) == 2, salts
 
 
+def test_warm_extract_results_build_replays_memoized_columns(spark, tmp_path, monkeypatch):
+    """Plan builders memoize their Column trees per process: a warm
+    extract_results() build sends only its DataFrame calls. Building
+    the ~700 field/results Columns on every call cost ~12k py4j round
+    trips per action — a third of a bulk action's wall time, all of it
+    serial driver time."""
+    import threading
+
+    from py4j import protocol as proto
+    from py4j.java_gateway import GatewayClient
+
+    from insurance_pdf_extractor_spark.functions.memo import clear_column_memo
+    from insurance_pdf_extractor_spark.plans.pipeline import extract_results
+    from insurance_pdf_extractor_spark.sources.render import render_documents_raw
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(50)
+    raw_dir = str(tmp_path / "raw")
+    render_documents_raw(docs, interleaved=True).write.parquet(raw_dir)
+    stored = spark.read.parquet(raw_dir)
+
+    sent = [0]
+    send = GatewayClient.send_command
+    builder = threading.get_ident()
+    release = proto.MEMORY_COMMAND_NAME + proto.MEMORY_DEL_SUBCOMMAND_NAME
+
+    def counting(self, command, *args, **kwargs):
+        # count what the building thread asks of the JVM; a memory-delete
+        # command releases an object Python garbage-collected, whenever
+        # the collector runs, so earlier tests' objects land in any window
+        if threading.get_ident() == builder and not command.startswith(release):
+            sent[0] += 1
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counting)
+
+    def build() -> int:
+        sent[0] = 0
+        extract_results(stored)
+        return sent[0]
+
+    clear_column_memo()
+    cold = build()
+    warm = build()
+    monkeypatch.undo()
+    assert warm <= 0.1 * cold, f"warm build sent {warm} py4j commands, cold {cold}"
+
+
+def test_results_memo_keys_on_model_and_prompt(spark, corpus_docs):
+    """Memoized results projections are keyed on their arguments: calls
+    that differ only in model_used/prompt_version each carry their own
+    model, prompt and cost — on records and reject stubs alike — and
+    equal a cold build for the same arguments."""
+    from insurance_pdf_extractor_spark import corpus as C
+    from insurance_pdf_extractor_spark.functions.memo import clear_column_memo
+    from insurance_pdf_extractor_spark.plans.pipeline import extract_results
+
+    raw = C.to_raw_df(spark, corpus_docs[:40]).cache()
+
+    def run(model: str, prompt: str) -> list:
+        df = extract_results(raw, max_size_bytes=60_000, model_used=model, prompt_version=prompt)
+        return sorted(df.collect(), key=lambda r: r["doc_id"])
+
+    calls = [("gemini-1.5-pro", "v2"), ("gemini-1.5-flash", "v3")]
+    got = {args: run(*args) for args in calls}
+    for args, rows in got.items():
+        assert {(r["model_used"], r["prompt_version"]) for r in rows} == {args}
+    pro, flash = got.values()
+    assert {r["status"] for r in pro} >= {"success", "error"}
+    costed = [(p, f) for p, f in zip(pro, flash) if p["status"] != "error"]
+    assert costed and all(p["estimated_cost"] > f["estimated_cost"] for p, f in costed)
+
+    for args, rows in got.items():
+        clear_column_memo()
+        assert run(*args) == rows
+    raw.unpersist()
+
+
 def test_render_path_renders_once_per_branch(spark):
     """render_udf is marked nondeterministic so filter pushdown cannot
     duplicate it — the plan historically evaluated the render kernel
